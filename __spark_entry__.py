@@ -36,6 +36,7 @@ from crawler_spark.functions.text import (
 )
 from crawler_spark.functions.urlnorm import canonicalize_col, host_of
 from crawler_spark.functions.text import MINHASH_P, minhash_params
+from crawler_spark.operators.bloom import build_bloom_sharded
 from crawler_spark.operators.dedup import (
     SIMHASH_BITS,
     duplicated_substring_spans,
@@ -46,7 +47,7 @@ from crawler_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
     url_seen_filter,
-    url_seen_filter_cuckoo,
+    url_seen_filter_sharded,
     winnow_fingerprints,
     winnow_near_dup_pairs,
 )
@@ -275,24 +276,19 @@ def q_url_seen_antijoin(spark, sf_dir):
         .select(F.col("o_orderkey").cast("string").alias("url"))
     )
     return (
-        url_seen_filter(spark, cand, seen, bloom=None)
+        url_seen_filter(spark, cand, seen)
         .select("url", "dont_filter")
         .orderBy("url")
     )
 
 
-def q_url_seen_cuckoo(spark, sf_dir):
-    """D1 via the CUCKOO tier (operators/cuckoo.py): build the sharded
-    filter over the seen set, DELETE an expired third of it (recrawl
-    eviction — the operation the bloom tier cannot do), then run the
-    two-tier filter against the remaining active set. The exact anti-join
-    resolves filter false positives, so the output equals a plain
-    anti-join vs (seen ∖ expired) regardless of filter state."""
-    from crawler_spark.operators.cuckoo import (
-        build_cuckoo_sharded,
-        delete_cuckoo_shards,
-    )
-
+def q_url_seen_bloom(spark, sf_dir):
+    """D1 via the sharded bloom prefilter with STALE entries: the filter is
+    built over the whole seen set, then an expired third of it is dropped
+    from the seen set only (recrawl eviction — the bloom keeps their bits),
+    and the two-tier filter runs against the remaining active set. The
+    exact anti-join resolves every bloom positive, so the output equals a
+    plain anti-join vs (seen ∖ expired) regardless of filter state."""
     _prep(spark)
     li = _t(spark, sf_dir, "lineitem")
     cand = (
@@ -307,15 +303,10 @@ def q_url_seen_cuckoo(spark, sf_dir):
     seen_all = orders.select(
         F.col("o_orderkey").cast("string").alias("url")
     ).withColumn("url_hash", F.xxhash64("url"))
-    expired = seen_all.filter(F.col("url").cast("long") % 9 == 0)
     active = seen_all.filter(F.col("url").cast("long") % 9 != 0)
-    shards = build_cuckoo_sharded(seen_all, "url_hash", num_shards=8)
-    nb = int(shards.select(F.max("num_buckets")).collect()[0][0])
-    after = delete_cuckoo_shards(
-        shards, expired, "url_hash", num_shards=8, num_buckets=nb
-    )
+    shards = build_bloom_sharded(seen_all, "url_hash", num_shards=8)
     return (
-        url_seen_filter_cuckoo(spark, cand, active, after)
+        url_seen_filter_sharded(spark, cand, active, shards, 8)
         .select("url", "dont_filter")
         .orderBy("url")
     )
@@ -1346,7 +1337,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_canonicalize": q_url_canonicalize,
         "trap_detection": q_trap_detection,
         "url_seen_antijoin": q_url_seen_antijoin,
-        "url_seen_cuckoo": q_url_seen_cuckoo,
+        "url_seen_bloom": q_url_seen_bloom,
         "frontier_dedup": q_frontier_dedup,
         "politeness_admission": q_politeness_admission,
         "robots_filter": q_robots_filter,
@@ -1754,7 +1745,7 @@ def _oracle_sql_base() -> dict[str, str]:
                OR NOT EXISTS (SELECT 1 FROM seen WHERE seen.url = cand.url)
             ORDER BY url
         """,
-        "url_seen_cuckoo": """
+        "url_seen_bloom": """
             WITH cand AS (
               SELECT DISTINCT cast(l_orderkey AS varchar) AS url,
                      l_orderkey % 10 = 0 AS dont_filter
@@ -2827,14 +2818,14 @@ def q_bm25_all(spark, sf_dir):
 
 
 def q_url_seen(spark, sf_dir):
-    """D1 both tiers: sharded-bloom+exact anti-join AND the cuckoo tier,
-    one row set discriminated by ``method`` (results must be identical
-    sets — the union doubles as a cross-check)."""
+    """D1 both paths: the exact anti-join AND the sharded-bloom prefilter
+    with stale entries, one row set discriminated by ``method`` (each
+    branch is checked against its own oracle)."""
     aj = q_url_seen_antijoin(spark, sf_dir).select(
         F.lit("antijoin").alias("method"), "url", "dont_filter")
-    ck = q_url_seen_cuckoo(spark, sf_dir).select(
-        F.lit("cuckoo").alias("method"), "url", "dont_filter")
-    return aj.unionByName(ck)
+    bl = q_url_seen_bloom(spark, sf_dir).select(
+        F.lit("bloom").alias("method"), "url", "dont_filter")
+    return aj.unionByName(bl)
 
 
 def q_multimodal_all(spark, sf_dir):
@@ -2902,7 +2893,7 @@ COMPOSITE_COVERS: dict[str, tuple[str, ...]] = {
     "dedup_pairs": ("ngram_jaccard", "minhash_lsh", "simhash_pairs",
                     "winnow_pairs", "embedding_near_dup"),
     "bm25_all": ("bm25_index", "bm25_search"),
-    "url_seen": ("url_seen_antijoin", "url_seen_cuckoo"),
+    "url_seen": ("url_seen_antijoin", "url_seen_bloom"),
     "multimodal_all": ("multimodal_features", "multimodal_frames"),
     "doc_quality": ("gopher_repetition", "pii_redact", "fasttext_quality"),
     "authority_budget": ("host_pagerank", "budget_allocation"),
@@ -3062,8 +3053,8 @@ def _oracle_sql_composites(base: dict[str, str]) -> dict[str, str]:
             SELECT 'antijoin' AS method, url, dont_filter
             FROM {w['url_seen_antijoin']} _a
             UNION ALL
-            SELECT 'cuckoo' AS method, url, dont_filter
-            FROM {w['url_seen_cuckoo']} _c
+            SELECT 'bloom' AS method, url, dont_filter
+            FROM {w['url_seen_bloom']} _b
         """,
         "multimodal_all": f"""
             SELECT 'features' AS kind, doc_id, media_ref, media_type,

@@ -39,7 +39,7 @@ BENCH_QUERIES = [
     "report_totals",
     "url_canonicalize",
     "url_seen_antijoin",
-    "url_seen_cuckoo",
+    "url_seen_bloom",
     "frontier_dedup",
     "politeness_admission",
     "robots_filter",

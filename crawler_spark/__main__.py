@@ -9,7 +9,7 @@ two verbs:
     python -m crawler_spark list-sites
     python -m crawler_spark crawl [SITE ...] --time EPOCH \\
         --checkpoint DIR [--recrawl|--resume] [--cpus N] \\
-        [--filter-kind bloom|cuckoo] [--autothrottle] [--max-batches N]
+        [--autothrottle] [--max-batches N]
     python -m crawler_spark report --checkpoint DIR [--date YYYY-MM-DD] \\
         [--cpus N]
 
@@ -20,7 +20,9 @@ engine's own checkpointed ``documents`` output instead of MySQL. The
 sandbox has no network, so ``crawl`` runs against the deterministic
 real-site fixture graph (sources/real_sites.py — 15 ported rule-sets);
 a deployment swaps in ``HttpFetcher`` via the library API
-(sources/fetcher.py) without touching the loop.
+(sources/fetcher.py) without touching the loop. URL-seen dedup needs no
+flag: the engine puts its sharded bloom prefilter in front of the exact
+seen-set join by itself once the seen set is large.
 """
 
 from __future__ import annotations
@@ -83,7 +85,6 @@ def cmd_crawl(args) -> int:
         cutoff,
         graph["as_of"],
         args.checkpoint,
-        filter_kind=args.filter_kind,
         autothrottle={} if args.autothrottle else None,
     )
     res = engine.run(
@@ -210,8 +211,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--recrawl", action="store_true",
                    help="new daily pass on an existing checkpoint")
     c.add_argument("--cpus", type=int, default=4)
-    c.add_argument("--filter-kind", choices=("bloom", "cuckoo"),
-                   default="bloom")
     c.add_argument("--autothrottle", action="store_true")
     c.add_argument("--max-batches", type=int, default=1000)
 

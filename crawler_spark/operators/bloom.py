@@ -1,5 +1,5 @@
-"""Partitioned bloom filter over 64-bit URL hashes, built and probed in
-Arrow batches (no JVM extension, no per-row Python).
+"""Sharded bloom filter over 64-bit URL hashes, built, merged and probed
+in pandas/Arrow groups (no JVM extension, no per-row Python).
 
 Replaces the reference's 1-synchronous-MySQL-SELECT-per-URL seen probe
 (reference demo/middlewares.py:50-55) with a set-oriented two-tier check:
@@ -7,25 +7,24 @@ bloom prefilter (this module) kills the common no-hit case cheaply; the
 exact left-anti join (operators/dedup.py) resolves bloom false positives so
 drop decisions are always exact (SURVEY §2.2 D1).
 
-Scale notes: the bitset is built as one partial bitset per partition via
-``mapInArrow`` (map-side, no shuffle) and OR-merged. The merged filter is
-broadcast for probing. At 10^10 URLs you shard the filter by hash prefix
-(``num_shards``) so each executor holds only the shards it probes; locally
-one shard suffices. Double hashing (Kirsch–Mitzenmacher) derives k probe
-positions from one xxhash64, so hashing stays on the JVM side.
+Scale notes: the filter is sharded by hash (``num_shards``) and never
+exists whole anywhere: each shard's bitset is built by one task
+(groupBy(shard).applyInPandas), a batch's new hashes are OR-merged into the
+stored shards per shard, and probing cogroups candidates with their shard,
+so an executor holds one shard at a time. Double hashing
+(Kirsch–Mitzenmacher) derives k probe positions from one xxhash64, so
+hashing stays on the JVM side. The filter has no deletion: an evicted URL's
+bits stay set and cost one exact-join row until the next capacity rebuild.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
 
@@ -72,47 +71,6 @@ def _set_bits(bits: np.ndarray, hashes: np.ndarray, num_bits: int, k: int) -> No
         idx = (h1 + np.uint64(i) * h2) % m
         np.bitwise_or.at(bits, (idx >> np.uint64(6)).astype(np.int64),
                          np.uint64(1) << (idx & np.uint64(63)))
-
-
-def build_bloom(
-    df: DataFrame,
-    hash_col: str,
-    expected_items: int | None = None,
-    fpp: float = 0.01,
-) -> BloomFilter:
-    """Build a bloom filter over ``df[hash_col]`` (long).
-
-    One partial bitset per partition (mapInArrow, map-side only), OR-merged
-    on the driver — the classic distributed bloom build; merge cost is
-    O(partitions × m/8 bytes), independent of row count.
-    """
-    if expected_items is None:
-        expected_items = df.count()
-    num_bits, k = BloomFilter.sized_for(expected_items, fpp)
-    words = num_bits // 64
-
-    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bits = np.zeros(words, dtype=np.uint64)
-        any_rows = False
-        for b in batches:
-            h = b.column(0).to_numpy(zero_copy_only=False)
-            if h.shape[0]:
-                any_rows = True
-                _set_bits(bits, h, num_bits, k)
-        if any_rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([bits.tobytes()], type=pa.binary())], names=["bits"]
-            )
-
-    partials = (
-        df.select(F.col(hash_col).alias("h"))
-        .mapInArrow(partial, "bits binary")
-        .collect()
-    )
-    bits = np.zeros(words, dtype=np.uint64)
-    for row in partials:
-        bits |= np.frombuffer(row.bits, dtype=np.uint64)
-    return BloomFilter(bits, k)
 
 
 BLOOM_SHARDS_SCHEMA = (
@@ -290,19 +248,3 @@ def bloom_probe_sharded(
         .select(*in_cols, "_maybe")
     )
 
-
-def bloom_probe_col(spark: SparkSession, bloom: BloomFilter, hash_col: str):
-    """Returns a Column: True where the hash *might* be in the set.
-
-    The bitset ships once per executor via SparkContext.broadcast; the probe
-    is a vectorized Arrow pandas UDF over numpy — zero per-row Python.
-    """
-    bc = spark.sparkContext.broadcast((bloom.bits.tobytes(), bloom.num_hashes))
-
-    @pandas_udf(BooleanType())
-    def maybe_seen(h: pd.Series) -> pd.Series:
-        raw, k = bc.value
-        flt = BloomFilter(np.frombuffer(raw, dtype=np.uint64), k)
-        return pd.Series(flt.might_contain_np(h.to_numpy(dtype=np.int64)))
-
-    return maybe_seen(F.col(hash_col))

@@ -2,7 +2,9 @@
 
 1. URL-seen dedup (the crawl engine's defining stage) — replaces the
    reference's per-request MySQL probe (demo/middlewares.py:50-68) with:
-   intra-batch dropDuplicates → bloom prefilter → exact left-anti join.
+   intra-batch dropDuplicates → exact left-anti join, with the sharded
+   bloom prefilter (operators/bloom.py) in front of the join once the seen
+   set is large. The prefilter never drops a row; the join decides.
    The ``dont_filter`` bypass column mirrors meta['dont_filter']
    (middlewares.py:55; used by demo/已部署/maharashtratimes.py:44-45).
 
@@ -29,7 +31,6 @@ from crawler_spark.functions.text import (
     minhash_params,
     shingles_of,
 )
-from crawler_spark.operators.bloom import BloomFilter, bloom_probe_col, build_bloom
 
 
 # ---------------------------------------------------------------------------
@@ -60,62 +61,18 @@ def url_seen_filter(
     spark: SparkSession,
     candidates: DataFrame,
     url_seen: DataFrame,
-    bloom: BloomFilter | None = None,
 ) -> DataFrame:
     """Drop candidates whose exact ``url`` is in the seen set, honoring the
-    ``dont_filter`` bypass (middlewares.py:55).
-
-    Two-tier: bloom-negative rows are *guaranteed* new (no false negatives)
-    and skip the shuffle entirely; only bloom-positive rows reach the exact
-    left-anti join, which resolves bloom false positives. Never drops on
-    bloom evidence alone — parity with the reference's exact string match
-    (middlewares.py:51) is preserved byte-for-byte.
-    """
+    ``dont_filter`` bypass (middlewares.py:55) — one left-anti join, the
+    reference's exact string match (middlewares.py:51). The crawl loop runs
+    this below the bloom threshold, where the join alone is cheaper than
+    any filter maintenance."""
     bypass = candidates.filter(F.col("dont_filter"))
     subject = candidates.filter(~F.col("dont_filter"))
-
-    if bloom is not None:
-        maybe = subject.withColumn("_maybe", bloom_probe_col(spark, bloom, "url_hash"))
-        definitely_new = maybe.filter(~F.col("_maybe")).drop("_maybe")
-        suspects = maybe.filter(F.col("_maybe")).drop("_maybe")
-    else:
-        definitely_new = None
-        suspects = subject
-
-    survivors = suspects.join(
+    survivors = subject.join(
         url_seen.select("url").distinct(), on="url", how="left_anti"
     )
-    if definitely_new is not None:
-        survivors = survivors.unionByName(definitely_new)
     return survivors.unionByName(bypass)
-
-
-def url_seen_bloom(spark: SparkSession, url_seen: DataFrame,
-                   expected_items: int | None = None) -> BloomFilter:
-    """Build the prefilter over the seen set's hashes."""
-    return build_bloom(url_seen, "url_hash", expected_items=expected_items)
-
-
-def _url_seen_filter_prefiltered(
-    candidates: DataFrame,
-    url_seen: DataFrame,
-    probe,
-) -> DataFrame:
-    """The shared two-tier kernel both sharded prefilter tiers run:
-    dont_filter bypass (middlewares.py:55) → ``probe(subject)`` marks
-    ``_maybe`` (False = guaranteed-new, skips the shuffle) → exact
-    left-anti join decides every actual drop. One copy of the semantics,
-    so a fix to the bypass rule or the join shape can never drift between
-    the bloom and cuckoo tiers."""
-    bypass = candidates.filter(F.col("dont_filter"))
-    subject = candidates.filter(~F.col("dont_filter"))
-    maybe = probe(subject)
-    definitely_new = maybe.filter(~F.col("_maybe")).drop("_maybe")
-    suspects = maybe.filter(F.col("_maybe")).drop("_maybe")
-    survivors = suspects.join(
-        url_seen.select("url").distinct(), on="url", how="left_anti"
-    )
-    return survivors.unionByName(definitely_new).unionByName(bypass)
 
 
 def url_seen_filter_sharded(
@@ -125,39 +82,25 @@ def url_seen_filter_sharded(
     bloom_shards: DataFrame,
     num_shards: int | None = None,
 ) -> DataFrame:
-    """url_seen_filter with a SHARDED bloom prefilter (the 10^10-URL
-    path): bitsets stay distributed end-to-end — built per shard, probed
-    via cogroup, never collected or broadcast whole (bloom.py
-    build_bloom_sharded/bloom_probe_sharded). Semantics are byte-identical
-    to url_seen_filter: bloom only prefilters; the exact left-anti join
-    decides every drop."""
+    """url_seen_filter with the SHARDED bloom prefilter in front of the
+    join (the 10^10-URL path): bitsets stay distributed end-to-end — built
+    per shard, probed via cogroup, never collected or broadcast whole
+    (bloom.py build_bloom_sharded/bloom_probe_sharded). Bloom-negative rows
+    are guaranteed new (no false negatives) and skip the join's shuffle;
+    only bloom-positive rows reach the exact left-anti join, which decides
+    every drop — so the survivors equal url_seen_filter's exactly, and a
+    stale bloom bit (an evicted URL) costs one join row, never a drop."""
     from crawler_spark.operators.bloom import bloom_probe_sharded
 
-    return _url_seen_filter_prefiltered(
-        candidates, url_seen,
-        lambda s: bloom_probe_sharded(s, bloom_shards, "url_hash", num_shards),
+    bypass = candidates.filter(F.col("dont_filter"))
+    subject = candidates.filter(~F.col("dont_filter"))
+    maybe = bloom_probe_sharded(subject, bloom_shards, "url_hash", num_shards)
+    definitely_new = maybe.filter(~F.col("_maybe")).drop("_maybe")
+    suspects = maybe.filter(F.col("_maybe")).drop("_maybe")
+    survivors = suspects.join(
+        url_seen.select("url").distinct(), on="url", how="left_anti"
     )
-
-
-def url_seen_filter_cuckoo(
-    spark: SparkSession,
-    candidates: DataFrame,
-    url_seen: DataFrame,
-    cuckoo_shards: DataFrame,
-    num_shards: int | None = None,
-) -> DataFrame:
-    """url_seen_filter with a sharded CUCKOO prefilter (operators/cuckoo.py)
-    instead of the bloom — identical two-tier semantics (prefilter only;
-    the exact left-anti join decides every drop), but the filter tier
-    supports DELETION, so recrawl eviction / retention rolls don't force a
-    filter rebuild over the full seen history. Same shard topology as the
-    bloom path: tables stay distributed, probed via cogroup."""
-    from crawler_spark.operators.cuckoo import cuckoo_probe_sharded
-
-    return _url_seen_filter_prefiltered(
-        candidates, url_seen,
-        lambda s: cuckoo_probe_sharded(s, cuckoo_shards, "url_hash", num_shards),
-    )
+    return survivors.unionByName(definitely_new).unionByName(bypass)
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,15 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 SHM_MIN_FREE_BYTES = 16 << 30
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM (at least 1 GiB), in MiB. The JVM grows
+    its heap toward this cap, and in local mode the same machine also runs
+    the Python workers and the shuffle tmpfs — a cap near total RAM gets
+    the whole process killed by the kernel instead of spilling."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, total // 4 >> 20)}m"
+
+
 def _pick_local_dir() -> str:
     """SPARK_GRAFT_LOCAL_DIR if set; else '/dev/shm/spark-local,/tmp' when
     tmpfs has ≥16 GiB free (shuffle on tmpfs is a big win on this sandbox's
@@ -58,11 +67,12 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         # PySpark's 1g default heap cannot hold local[32]'s concurrent task
-        # buffers; size for the machine (overridable per environment — on a
-        # real cluster this is executor memory via spark-submit).
+        # buffers; size for the machine (SPARK_GRAFT_DRIVER_MEM overrides
+        # per deployment — on a real cluster this is executor memory via
+        # spark-submit).
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
         )
         # Shuffle/spill files on tmpfs when available: this sandbox's /tmp
         # is a virtual disk whose bandwidth caps shuffle-heavy scaling (on

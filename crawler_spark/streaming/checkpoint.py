@@ -97,23 +97,6 @@ class CrawlCheckpoint:
     def read_part(self, batch_id: int, name: str) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self._batch_dir(batch_id), name))
 
-    def replace_part(self, batch_id: int, name: str, df: DataFrame) -> None:
-        """Atomically swap a committed batch's part with new contents
-        (used for filter surgery on eviction). Write-new → rename-old-away
-        → rename-new-in → drop-old; a crash at any point leaves either the
-        old or the new part fully readable — never a torn mix."""
-        bdir = self._batch_dir(batch_id)
-        final = os.path.join(bdir, name)
-        tmp = final + "__tmp"
-        old = final + "__old"
-        for stale in (tmp, old):
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
-        df.coalesce(self.write_partitions).write.mode("overwrite").parquet(tmp)
-        os.rename(final, old)
-        os.rename(tmp, final)
-        shutil.rmtree(old)
-
     # -- eviction log (recrawl / retention rolls) ---------------------------
 
     def _evictions_root(self) -> str:

@@ -6,7 +6,7 @@ set. Here each micro-batch is one pass of set-oriented stages:
 
     frontier ──intra-batch dedup──► candidates
              ──anti-join vs scheduled (intra-run dupefilter)──►
-             ──bloom prefilter + exact anti-join vs url_seen──►
+             ──[bloom prefilter] + exact anti-join vs url_seen──►
              ──robots + per-host politeness admission (window)──►
     admitted ──fetch (mock: broadcast join vs site graph)──►
              ──parse (Arrow mapInPandas over the site-parser registry)──►
@@ -24,8 +24,10 @@ URL-seen set, and document set are byte-identical at any parallelism
 Scale posture: dedup joins shuffle on url (uniform); the politeness window
 is two-phase salted (operators/politeness.py) so a mega-host cannot pin a
 partition; the fetch join broadcasts the small side; url_seen/docs are
-append-only delta tables (no O(history) rewrites); bloom probing keeps the
-common-case candidate off the shuffle entirely once the seen set is large.
+append-only delta tables (no O(history) rewrites); once the seen set
+passes ``bloom_threshold`` the sharded bloom keeps the common-case
+candidate off the join's shuffle. The bloom is the one prefilter: it never
+decides a drop, and it is maintained incrementally in the checkpoint.
 """
 
 from __future__ import annotations
@@ -100,7 +102,6 @@ class CrawlEngine:
         bloom_shards_n: int = 32,  # shard count of the sharded URL-seen bloom
         bloom_threshold: int = 4096,  # auto-enable bloom above this |url_seen|
         fetcher=None,  # Fetcher seam; default MockWebFetcher(site_graph)
-        filter_kind: str = "bloom",  # URL-seen prefilter tier: bloom | cuckoo
         autothrottle: dict | None = None,  # W4: {} = Scrapy defaults; None = off
         authority: DataFrame | None = None,  # (host, rank_micro) priority mass
         host_budgets: DataFrame | None = None,  # (host, budget) admission cap
@@ -132,13 +133,6 @@ class CrawlEngine:
         self.compact_every = compact_every
         self.bloom_shards_n = bloom_shards_n
         self.bloom_threshold = bloom_threshold
-        if filter_kind not in ("bloom", "cuckoo"):
-            raise ValueError(f"filter_kind must be bloom|cuckoo, got {filter_kind}")
-        # "cuckoo" swaps the prefilter tier for the deletable cuckoo filter
-        # (operators/cuckoo.py) — identical two-tier drop semantics (the
-        # exact anti-join still decides), but seen-entries can be EVICTED
-        # incrementally (recrawl TTLs) without a filter rebuild.
-        self.filter_kind = filter_kind
         # W4 AutoThrottle (settings.py:72-82, commented out in the reference
         # with these defaults): when a dict is passed, per-host delays adapt
         # to observed response latency — admission uses max(robots/static
@@ -335,33 +329,16 @@ class CrawlEngine:
         a rebuild over the full history). A from-scratch distributed build
         happens only on activation, on resume from a checkpoint without
         stored shards, or when the seen set outgrew the filter's sized
-        capacity (amortized doubling — O(log |seen|) rebuilds ever)."""
-        kind = self.filter_kind
+        capacity (amortized doubling — O(log |seen|) rebuilds ever). Every
+        build reads ``url_seen``, the eviction-subtracted seen set, so a
+        rebuild also drops the stale bits of evicted URLs."""
         params = None
-        if prev_batch >= 0 and self.ckpt.has_part(prev_batch, kind):
-            params = self.ckpt.stats(prev_batch).get(kind)
+        if prev_batch >= 0 and self.ckpt.has_part(prev_batch, "bloom"):
+            params = self.ckpt.stats(prev_batch).get("bloom")
         if params is not None and seen_count <= params["capacity"]:
             self._bloom_params = params
-            return self.ckpt.read_part(prev_batch, kind)
+            return self.ckpt.read_part(prev_batch, "bloom")
         capacity = max(4 * max(seen_count, 1), 4 * self.bloom_threshold)
-        if kind == "cuckoo":
-            from crawler_spark.operators.cuckoo import (
-                CuckooFilter,
-                build_cuckoo_sharded,
-            )
-
-            num_buckets = CuckooFilter.buckets_for(
-                max(1, capacity // self.bloom_shards_n)
-            )
-            self._bloom_params = {
-                "num_shards": self.bloom_shards_n,
-                "num_buckets": num_buckets,
-                "capacity": capacity,
-            }
-            return build_cuckoo_sharded(
-                url_seen, "url_hash", self.bloom_shards_n,
-                expected_items=capacity,
-            )
         num_bits, k = sharded_params(self.bloom_shards_n, capacity)
         self._bloom_params = {
             "num_shards": self.bloom_shards_n,
@@ -509,30 +486,21 @@ class CrawlEngine:
             if self.use_bloom is not None
             else seen_count >= self.bloom_threshold
         )
-        # DEFAULT dedup path above the threshold: SHARDED bloom prefilter
-        # (distributed build/probe/merge, bloom.py) + exact anti-join —
-        # no driver-merged bitset anywhere in the loop (VERDICT r2 'What's
-        # wrong #1' / 'Next round #1'). Below the threshold the exact
-        # anti-join alone is cheaper than any filter maintenance.
+        # Above the threshold: sharded bloom prefilter (distributed
+        # build/probe/merge, bloom.py) in front of the exact anti-join.
+        # Below it the exact anti-join alone is cheaper than any filter
+        # maintenance.
         # Persisted: referenced by the downstream pipeline AND the per-host
         # dedup metrics (A4) — without the persist the dedup chain runs twice.
         if bloom_on:
             bloom_shards = self._bloom_state(b - 1, url_seen, seen_count).persist()
-            if self.filter_kind == "cuckoo":
-                from crawler_spark.operators.dedup import url_seen_filter_cuckoo
-
-                dedup_out = url_seen_filter_cuckoo(
-                    spark, cands, url_seen, bloom_shards,
-                    self._bloom_params["num_shards"],
-                ).persist()
-            else:
-                dedup_out = url_seen_filter_sharded(
-                    spark, cands, url_seen, bloom_shards,
-                    self._bloom_params["num_shards"],
-                ).persist()
+            dedup_out = url_seen_filter_sharded(
+                spark, cands, url_seen, bloom_shards,
+                self._bloom_params["num_shards"],
+            ).persist()
         else:
             bloom_shards = None
-            dedup_out = url_seen_filter(spark, cands, url_seen, None).persist()
+            dedup_out = url_seen_filter(spark, cands, url_seen).persist()
         # A4 honest dedup accounting: candidates dropped per host by the
         # three dedup tiers (intra-batch, intra-run, URL-seen) this batch —
         # measured, not fabricated (VERDICT r1 'What's wrong #5').
@@ -733,18 +701,10 @@ class CrawlEngine:
                 F.xxhash64(canonicalize_col(F.col("request_url")))
                 .alias("url_hash")
             )
-            if self.filter_kind == "cuckoo":
-                from crawler_spark.operators.cuckoo import merge_cuckoo_shards
-
-                parts["cuckoo"] = merge_cuckoo_shards(
-                    bloom_shards, delta_hashes, "url_hash",
-                    p["num_shards"], p["num_buckets"],
-                )
-            else:
-                parts["bloom"] = merge_bloom_shards(
-                    bloom_shards, delta_hashes, "url_hash",
-                    p["num_shards"], p["num_bits"], p["num_hashes"],
-                )
+            parts["bloom"] = merge_bloom_shards(
+                bloom_shards, delta_hashes, "url_hash",
+                p["num_shards"], p["num_bits"], p["num_hashes"],
+            )
         # All remaining per-batch actions — the stats counts (over
         # persisted inputs) and every part write — are independent Spark
         # jobs; one driver-thread pool runs them concurrently, so batch
@@ -768,13 +728,13 @@ class CrawlEngine:
             "run_start": self._run_start_batch,
         }
         if bloom_on:
-            stats[self.filter_kind] = self._bloom_params
+            stats["bloom"] = self._bloom_params
         self.ckpt.finalize(b, stats)
         if bloom_on:
             # Only the newest committed snapshot is ever read back
             # (_bloom_state reads prev_batch); older full-filter copies
             # would accumulate O(batches × filter_size) on disk.
-            self.ckpt.prune_part(self.filter_kind, b)
+            self.ckpt.prune_part("bloom", b)
         if self.autothrottle is not None:
             self.ckpt.prune_part("at_delays", b)
         self._seen_total += n_docs
@@ -792,17 +752,15 @@ class CrawlEngine:
         append-only: eviction is an append to the side log the seen-set
         projection subtracts (checkpoint.read_evictions).
 
-        With the cuckoo tier active, the stored filter shards are also
-        updated in place via per-fingerprint DELETION (the capability the
-        bloom tier lacks) — no rebuild over the full history. With the
-        bloom tier nothing is deleted; the now-stale maybe-positives cost
-        one exact-anti-join row each and never correctness (the exact join
-        is always authoritative). Returns the number of URLs evicted.
+        The stored bloom shards are left as they are: an evicted URL's
+        bits stay set, so it probes maybe-seen and costs one exact
+        anti-join row — never a wrong drop, since the join runs against the
+        eviction-subtracted seen set. The next capacity rebuild starts from
+        that set and clears the stale bits. Returns the number of URLs
+        evicted.
 
         ``urls``: any DataFrame with a ``url`` column. Only URLs actually
-        in the current seen set are evicted (and only their hashes deleted
-        from the filter — deleting a never-inserted fingerprint could
-        evict a colliding entry, Fan et al. §3.3)."""
+        in the current seen set are evicted."""
         last = self.ckpt.last_complete_batch()
         upto = last if last is not None else -1
         seen = self._url_seen_state(upto)
@@ -817,27 +775,8 @@ class CrawlEngine:
             .persist()
         )
         n = ev.count()
-        if n == 0:
-            ev.unpersist()
-            return 0
-        if (
-            last is not None
-            and self.filter_kind == "cuckoo"
-            and self.ckpt.has_part(last, "cuckoo")
-        ):
-            from crawler_spark.operators.cuckoo import delete_cuckoo_shards
-
-            p = self.ckpt.stats(last)["cuckoo"]
-            # NOTE on duplicates: a URL stored k times (multiset docs)
-            # inserted k fingerprint copies; one delete leaves k-1 —
-            # a stale maybe-positive, which the exact join resolves.
-            updated = delete_cuckoo_shards(
-                self.ckpt.read_part(last, "cuckoo"),
-                ev.select("url_hash"),
-                "url_hash", p["num_shards"], p["num_buckets"],
-            )
-            self.ckpt.replace_part(last, "cuckoo", updated)
-        self.ckpt.append_evictions(ev)
+        if n > 0:
+            self.ckpt.append_evictions(ev)
         ev.unpersist()
         return n
 

@@ -1,35 +1,9 @@
-"""Bloom prefilter invariants (SURVEY §7.4): ZERO false negatives ever;
-false-positive rate within a sane bound of the configured fpp."""
+"""Sharded bloom prefilter invariants (SURVEY §7.4): ZERO false negatives
+ever; false-positive rate within a sane bound of the configured fpp; shard
+bitsets independent of input partitioning and of incremental merging."""
 
-import numpy as np
+import pytest
 from pyspark.sql import functions as F
-
-from crawler_spark.operators.bloom import bloom_probe_col, build_bloom
-
-
-def test_no_false_negatives_and_fp_bound(spark):
-    n = 5000
-    members = spark.range(n).select(F.xxhash64("id").alias("h"))
-    bloom = build_bloom(members, "h", expected_items=n, fpp=0.01)
-
-    # every member must probe positive
-    probed = members.select(bloom_probe_col(spark, bloom, "h").alias("m"))
-    assert probed.filter(~F.col("m")).count() == 0
-
-    # non-members: FP rate near fpp (generous 5x bound for small samples)
-    non = spark.range(n, 3 * n).select(F.xxhash64("id").alias("h"))
-    fp = non.select(bloom_probe_col(spark, bloom, "h").alias("m")).filter(
-        F.col("m")
-    ).count()
-    assert fp / (2 * n) < 0.05
-
-
-def test_partitioned_build_matches_single_partition(spark):
-    df = spark.range(2000).select(F.xxhash64("id").alias("h"))
-    b_many = build_bloom(df.repartition(8), "h", expected_items=2000)
-    b_one = build_bloom(df.coalesce(1), "h", expected_items=2000)
-    assert np.array_equal(b_many.bits, b_one.bits)
-    assert b_many.num_hashes == b_one.num_hashes
 
 
 def test_sharded_probe_no_false_negatives(spark):
@@ -61,7 +35,8 @@ def test_incremental_merge_matches_from_scratch(spark):
     """merge_bloom_shards (the crawl loop's per-batch maintenance path)
     must be BITWISE identical to a from-scratch build over the union —
     OR is commutative, parameters are pinned, so the shard bitsets agree
-    exactly."""
+    exactly. The from-scratch build runs over 8 partitions and over 1: the
+    bitsets must not depend on how the input is partitioned."""
     from crawler_spark.operators.bloom import (
         build_bloom_sharded,
         merge_bloom_shards,
@@ -78,22 +53,21 @@ def test_incremental_merge_matches_from_scratch(spark):
     for d in (d1, d2):
         inc = merge_bloom_shards(inc, d, "url_hash", shards, num_bits, k)
 
-    full = build_bloom_sharded(
-        spark.range(2000).select(F.xxhash64("id").alias("url_hash")),
-        "url_hash", shards, expected_items=capacity,
-    )
     got = {r.shard: (r.bits, r.num_hashes, r.num_bits) for r in inc.collect()}
-    want = {r.shard: (r.bits, r.num_hashes, r.num_bits) for r in full.collect()}
-    assert got == want
     assert len(got) == shards
+    union = spark.range(2000).select(F.xxhash64("id").alias("url_hash"))
+    for layout in (union.repartition(8), union.coalesce(1)):
+        full = build_bloom_sharded(layout, "url_hash", shards,
+                                   expected_items=capacity)
+        want = {r.shard: (r.bits, r.num_hashes, r.num_bits)
+                for r in full.collect()}
+        assert got == want
 
 
 def test_probe_shard_count_mismatch_raises(spark):
     """A probe modulus that disagrees with the build modulus must fail
     loudly instead of silently producing bloom false negatives (ADVICE r2
     #1)."""
-    import pytest
-
     from crawler_spark.operators.bloom import (
         bloom_probe_sharded,
         build_bloom_sharded,
@@ -143,7 +117,7 @@ def test_sharded_url_seen_filter_matches_unsharded(spark):
     ).withColumn("url_hash", F.xxhash64(canonicalize_col(F.col("url"))))
 
     plain = {r.url for r in
-             url_seen_filter(spark, cands, seen, bloom=None).collect()}
+             url_seen_filter(spark, cands, seen).collect()}
     bl = build_bloom_sharded(seen, "url_hash", num_shards=4,
                              expected_items=400)
     sharded = {r.url for r in

@@ -474,7 +474,7 @@ def test_fasttext_single_word_doc_is_neutral(spark):
         (0, 0, 0.5, True)
 
 
-def test_fasttext_real_model_file_same_plan(spark):
+def test_fasttext_real_model_file_same_plan(spark, tmp_path):
     """The 'swap in a real model, identical plan' claim, proven with an
     actual fastText TEXT-format (.vec) model file: load_fasttext_vec
     computes each feature's scalar weight as input·output (the supervised
@@ -496,6 +496,13 @@ def test_fasttext_real_model_file_same_plan(spark):
     b_click = int(hashlib.md5(b"click here").hexdigest()[:15], 16) % 4096
     assert weights[b_good] == 725000       # 0.8 - 0.1 + 0.025
     assert weights[b_click] == -1100000    # -0.9 - 0.3 + 0.1
+    # fastText itself writes every vector row with a trailing space
+    with open(path) as fh:
+        header, *vec_rows = fh.readlines()
+    spaced = tmp_path / "tiny_quality_spaced.vec"
+    spaced.write_text(
+        header + "".join(r.rstrip("\n") + " \n" for r in vec_rows))
+    assert load_fasttext_vec(str(spaced)) == weights
 
     rows = [(1, "good article useful info", "en"),
             (2, "click here buy now", "en"),

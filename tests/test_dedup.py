@@ -4,7 +4,7 @@ near-dup operators."""
 from pyspark.sql import functions as F
 
 from crawler_spark.functions.urlnorm import canonicalize_col
-from crawler_spark.operators.bloom import build_bloom
+from crawler_spark.operators.bloom import build_bloom_sharded
 from crawler_spark.operators.dedup import (
     embedding_near_dup_lsh,
     embedding_near_dup_pairs,
@@ -14,6 +14,7 @@ from crawler_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
     url_seen_filter,
+    url_seen_filter_sharded,
 )
 
 CAND_SCHEMA = "url string, url_hash long, dont_filter boolean, seq string"
@@ -53,11 +54,12 @@ def test_url_seen_exact_with_and_without_bloom(spark):
     )
     expect = {f"http://s/{i}" for i in range(200, 250)} | {"http://s/42"}
 
-    no_bloom = url_seen_filter(spark, cands, seen, bloom=None)
+    no_bloom = url_seen_filter(spark, cands, seen)
     assert {r.url for r in no_bloom.select("url").collect()} == expect
 
-    bloom = build_bloom(seen, "url_hash", expected_items=200)
-    with_bloom = url_seen_filter(spark, cands, seen, bloom=bloom)
+    bloom = build_bloom_sharded(seen, "url_hash", num_shards=4,
+                                expected_items=200)
+    with_bloom = url_seen_filter_sharded(spark, cands, seen, bloom, 4)
     assert {r.url for r in with_bloom.select("url").collect()} == expect
 
 

@@ -8,15 +8,17 @@ DB (middlewares.py:51). Scrapy's intra-run dupefilter (RFPDupeFilter)
 resets per invocation. ``CrawlEngine.run(recrawl=True)`` reproduces
 exactly that on the existing checkpoint — batch numbering and the
 docs/crawl_log/metrics history stay append-only — and ``evict_urls``
-adds the retention-roll capability (cuckoo tier: incremental filter
-deletion; bloom tier: stale maybe-positives resolved by the exact
-anti-join). Every run is verified byte-for-byte against the
+adds the retention-roll capability (with the bloom prefilter on, an
+evicted URL's stale maybe-positive is resolved by the exact anti-join).
+Every run is verified byte-for-byte against the
 reference-semantics simulator seeded with the prior runs' seen set."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from crawler_spark.functions.urlnorm import canonicalize_col
+from crawler_spark.operators.bloom import bloom_probe_sharded
 from crawler_spark.simulator import simulate_crawl
 from crawler_spark.sources.mock_web import (
     AS_OF,
@@ -81,81 +83,61 @@ def test_recrawl_pass_matches_simulator_with_preseen(spark,
 
 def test_evict_then_recrawl_refetches_exactly_the_evicted(spark,
                                                           tmp_path_factory):
+    """Evicted URLs are refetched by the next recrawl pass, and nothing
+    else is — with the exact join alone and with the bloom prefilter on,
+    where the evicted URLs' bits stay set in the stored filter and only
+    the exact join against the eviction-subtracted seen set lets them
+    through."""
     g = build_site_graph(n_sites=1, cats_per_site=2, pages_per_cat=2,
                          entries_per_page=3, dup_fraction=0.0, seed=23)
     s1 = simulate_crawl(g)
-    ckpt = tmp_path_factory.mktemp("ckpt_evict")
-    eng1 = _mk_engine(spark, g, ckpt)
-    res1 = eng1.run()
-    assert _engine_log(res1) == s1["crawl_log"]
-    b0 = res1["last_batch"] + 1
+    for use_bloom in (None, True):
+        ckpt = tmp_path_factory.mktemp("ckpt_evict")
+        eng1 = _mk_engine(spark, g, ckpt, use_bloom=use_bloom)
+        res1 = eng1.run()
+        assert _engine_log(res1) == s1["crawl_log"]
+        b0 = res1["last_batch"] + 1
 
-    stored = sorted(
-        r.request_url for r in res1["docs"].select("request_url").collect()
-    )
-    evict = stored[:2]
-    eng2 = _mk_engine(spark, g, ckpt)
-    n = eng2.evict_urls(
-        spark.createDataFrame(
-            [(u,) for u in evict + ["http://never-seen.example.com/x"]],
-            "url string",
+        stored = sorted(
+            r.request_url
+            for r in res1["docs"].select("request_url").collect()
         )
-    )
-    assert n == 2  # the never-seen URL is not evicted (delete contract)
-    assert {r.url for r in eng2._url_seen_state(b0 - 1).collect()} == (
-        s1["url_seen"] - set(evict)
-    )
+        evict = stored[:2]
+        eng2 = _mk_engine(spark, g, ckpt, use_bloom=use_bloom)
+        n = eng2.evict_urls(
+            spark.createDataFrame(
+                [(u,) for u in evict + ["http://never-seen.example.com/x"]],
+                "url string",
+            )
+        )
+        assert n == 2  # the never-seen URL is not evicted
+        assert {r.url for r in eng2._url_seen_state(b0 - 1).collect()} == (
+            s1["url_seen"] - set(evict)
+        )
+        if use_bloom:
+            # the stored filter the recrawl pass starts from still holds
+            # the evicted URLs' bits: they probe maybe-seen
+            ev = spark.createDataFrame(
+                [(u,) for u in evict], "url string"
+            ).withColumn(
+                "url_hash", F.xxhash64(canonicalize_col(F.col("url")))
+            )
+            probed = bloom_probe_sharded(
+                ev, eng2.ckpt.read_part(b0 - 1, "bloom"), "url_hash"
+            )
+            assert all(r._maybe for r in probed.collect())
 
-    res2 = eng2.run(recrawl=True)
-    s2 = simulate_crawl(g, url_seen_init=s1["url_seen"] - set(evict))
-    assert _scoped_log(res2, b0) == s2["crawl_log"]
-    # exactly the evicted articles were stored again
-    run2_urls = sorted(
-        d["request_url"] for d in _sim_docs(s2)
-    )
-    assert run2_urls == sorted(evict)
-    assert res2["docs"].count() == len(s1["docs_rows"]) + 2
-    # and they are back in the seen set
-    assert {r.url for r in res2["url_seen"].collect()} == s1["url_seen"]
-
-
-def test_cuckoo_eviction_updates_filter_in_place(spark, tmp_path_factory):
-    """With the cuckoo tier active the eviction path DELETES the evicted
-    fingerprints from the stored shard tables (no rebuild); the recrawl
-    pass still matches the simulator byte-for-byte — the two-tier design
-    means filter surgery can never affect correctness."""
-    g = build_site_graph(n_sites=2, cats_per_site=2, pages_per_cat=2,
-                         entries_per_page=3, dup_fraction=0.2, seed=29)
-    s1 = simulate_crawl(g)
-    ckpt = tmp_path_factory.mktemp("ckpt_cuckoo_evict")
-    eng1 = _mk_engine(spark, g, ckpt, use_bloom=True, filter_kind="cuckoo")
-    res1 = eng1.run()
-    assert _engine_log(res1) == s1["crawl_log"]
-    b0 = res1["last_batch"] + 1
-    last = eng1.ckpt.last_complete_batch()
-    before = {
-        r.shard: (r.tbl, r.stash)
-        for r in eng1.ckpt.read_part(last, "cuckoo").collect()
-    }
-
-    stored = sorted({
-        r.request_url for r in res1["docs"].select("request_url").collect()
-    })
-    evict = stored[:3]
-    eng2 = _mk_engine(spark, g, ckpt, use_bloom=True, filter_kind="cuckoo")
-    assert eng2.evict_urls(
-        spark.createDataFrame([(u,) for u in evict], "url string")
-    ) == 3
-    after = {
-        r.shard: (r.tbl, r.stash)
-        for r in eng2.ckpt.read_part(last, "cuckoo").collect()
-    }
-    assert before != after  # fingerprints really deleted in place
-
-    res2 = eng2.run(recrawl=True)
-    s2 = simulate_crawl(g, url_seen_init=s1["url_seen"] - set(evict))
-    assert _scoped_log(res2, b0) == s2["crawl_log"]
-    assert {r.url for r in res2["url_seen"].collect()} == s2["url_seen"]
+        res2 = eng2.run(recrawl=True)
+        s2 = simulate_crawl(g, url_seen_init=s1["url_seen"] - set(evict))
+        assert _scoped_log(res2, b0) == s2["crawl_log"]
+        # exactly the evicted articles were stored again
+        run2_urls = sorted(
+            d["request_url"] for d in _sim_docs(s2)
+        )
+        assert run2_urls == sorted(evict)
+        assert res2["docs"].count() == len(s1["docs_rows"]) + 2
+        # and they are back in the seen set
+        assert {r.url for r in res2["url_seen"].collect()} == s1["url_seen"]
 
 
 def test_interrupted_recrawl_resumes_with_run_scope(spark,
